@@ -1140,12 +1140,10 @@ class _Parser(HTMLParser):
     # document finalization (reference HTML2Markdown:59-73)
     # ------------------------------------------------------------------
 
-    def finish(self) -> str:
+    def finish(self) -> None:
+        """Append the document's final chunks to outtextlist."""
         self.pbr()
         self.o("", force="end")
-        outtext = "".join(self.outtextlist)
-        nbsp = "\u00a0" if self.cfg.unicode_snob else " "
-        return outtext.replace(constants.NBSP_PLACEHOLDER, nbsp)
 
 
 def _is_punctuation(ch: str) -> bool:
@@ -1307,30 +1305,24 @@ def _dispatch_events(parser: "_Parser", events: list) -> None:
             handle_tag(ev[1], {}, start=False)
 
 
-def _feed_document(parser: "_Parser", processed: str) -> None:
-    """Feed one complete pre-processed document: fast regex tokenizer when
-    eligible, html.parser.HTMLParser otherwise (identical event streams --
-    see _fast_tokenize)."""
-    events = None if _FORCE_FALLBACK else _fast_tokenize(processed)
-    if events is None:
-        parser.feed(processed)
-        return
-    _dispatch_events(parser, events)
+def _fast_tokenize_all(fragments: List[str]) -> Optional[List[list]]:
+    """Fast-tokenizer events for every fragment, or None when any one of
+    them is ineligible (or the HTMLParser reference path is forced)."""
+    if _FORCE_FALLBACK:
+        return None
+    all_events = []
+    for fragment in fragments:
+        events = _fast_tokenize(fragment)
+        if events is None:
+            return None
+        all_events.append(events)
+    return all_events
 
 
 def convert(html_text: str, cfg: Optional[Config] = None) -> str:
     """Convert one HTML document to markdown-formatted plain text."""
-    cfg = cfg or Config()
-    html_text = html_text.strip()
-    if not html_text:
-        return ""
-    parser = _Parser(cfg)
-    _feed_document(parser, _preprocess_entities(html_text))
-    parser.close()
-    result = optwrap(parser.finish(), cfg)
-    if cfg.pad_tables:
-        return utils.pad_tables_in_text(result)
-    return result
+    spans = convert_spans([("html", html_text.strip(), "")], cfg)
+    return "".join(text for kind, text, _media in spans if kind == "text")
 
 
 def convert_spans(
@@ -1387,36 +1379,23 @@ def convert_spans(
         else:
             coalesced.append((kind, text, media))
     spans = coalesced
-    multi_fragment = sum(1 for k, _t, _m in spans if k == "html") > 1
-    # fast path for interleaved documents: if EVERY html fragment
+    # each fragment is pre-processed once.  If EVERY fragment
     # fast-tokenizes on its own, no fragment ends mid-token (the fast
     # tokenizer rejects dangling '<'/unterminated constructs), so direct
-    # event dispatch is event-identical to HTMLParser's incremental
-    # feed -- which is only needed when a tag genuinely straddles a
-    # media boundary, and that case falls back whole-document below.
-    # Differentially fuzzed in tests/test_fast_tokenizer.py.
-    frag_events: Dict[int, Optional[list]] = {}
-    if multi_fragment and not _FORCE_FALLBACK:
-        for i, (kind, text, _media) in enumerate(spans):
-            if kind != "html":
-                continue
-            events = _fast_tokenize(_preprocess_entities(text))
-            if events is None:
-                frag_events.clear()
-                break
-            frag_events[i] = events
-    for i, (kind, text, media) in enumerate(spans):
+    # event dispatch is event-identical to HTMLParser's incremental feed
+    # -- which is only needed when a tag genuinely straddles a media
+    # boundary, and then every fragment goes through it.  Differentially
+    # fuzzed in tests/test_fast_tokenizer.py.
+    fragments = [_preprocess_entities(t) for k, t, _m in spans if k == "html"]
+    frag_events = _fast_tokenize_all(fragments)
+    frag = 0
+    for kind, _text, media in spans:
         if kind == "html":
-            if multi_fragment:
-                if frag_events:
-                    _dispatch_events(parser, frag_events[i])
-                else:
-                    # a fragment may split mid-tag across a media
-                    # boundary; HTMLParser's incremental buffer handles
-                    # that, the fast tokenizer does not
-                    parser.feed(_preprocess_entities(text))
+            if frag_events is None:
+                parser.feed(fragments[frag])
             else:
-                _feed_document(parser, _preprocess_entities(text))
+                _dispatch_events(parser, frag_events[frag])
+            frag += 1
         elif kind == "media":
             # flush the pending paragraph break so the segment ends on a
             # clean line boundary before the media asset
@@ -1427,7 +1406,7 @@ def convert_spans(
             ordered_media.append((media, parser.segment))
             parser.segment += 1
     parser.close()
-    parser.finish()  # appends the final chunks to outtextlist
+    parser.finish()
     _drain_img_refs()
 
     chunks = parser.outtextlist

@@ -12,19 +12,21 @@ plan is declared via the DataFrame API.
 
 Design notes for the 10^12-document scale target:
   * documents are embarrassingly parallel; state never crosses rows;
-  * Arrow batches amortize the JVM->Python boundary; batch size should be
-    tuned by bytes not rows (see recommended_session_conf);
+  * Arrow batches amortize the JVM->Python boundary; documents are KB..MB,
+    so batches are capped at a few hundred rows (see
+    recommended_session_conf);
   * skew: a single 100 MB document in a partition of 4 KB documents
     stalls the stage tail -- salt_by_size() spreads documents uniformly
     by a full-range hash salt before the projection;
-  * resume: the checkpoint module writes per-partition manifests; the
-    anti-join in resume_filter() skips completed documents.
+  * resume: the checkpoint module writes one manifest per hash bucket of
+    doc_id and re-runs only the buckets without one; resume_filter() is a
+    separate row-level anti-join against an existing output.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Tuple
 
 import pandas as pd
 
@@ -79,41 +81,38 @@ OUTPUT_SCHEMA = StructType(
 
 
 def recommended_session_conf() -> dict:
-    """Session settings for the extraction workload (large string rows)."""
+    """Session settings for the extraction workload (large string rows);
+    only those that differ from Spark's defaults."""
     return {
         # smaller Arrow batches: documents are KB..MB, not tuples
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # a 100 TB corpus scan: default 128 MB splits are fine, but keep
-        # shuffle partitions proportional to cluster cores, not data size
-        "spark.sql.files.maxPartitionBytes": "134217728",
     }
 
 
 def _convert_row_core(raw_spans, cfg: Config):
     """Pure per-row conversion: input span structs -> (span tuples, metrics).
 
-    A malformed row (NULL spans, NULL offsets, conversion failure) must
-    never fail the job: it yields empty output with metrics.malformed set
-    (the reference raises LogicException for e.g. invalid base URLs -- we
-    record it instead).  Returns output spans as (kind, text, media_ref)
-    tuples; ``_convert_row_spans`` adds the struct dicts for callers that
-    ship the spans column, while the output-pruned projections
-    (extract_metrics_only / extract_markdown_only) consume the tuples
-    directly and never build them.
+    A malformed row (NULL spans, a NULL span, a NULL offset, conversion
+    failure) must never fail the job: it yields empty output with
+    metrics.malformed set (the reference raises LogicException for e.g.
+    invalid base URLs -- we record it instead).  An empty spans array is
+    a well-formed empty document.  Returns output spans as (kind, text,
+    media_ref) tuples; ``_project`` turns them into the shipped columns.
     """
     in_spans = []
     bytes_in = 0
     t0 = time.perf_counter()
     malformed = False
     try:
-        # NB: raw_spans arrives as a numpy array from Arrow -- `or []`
-        # would raise on its ambiguous truth value
-        spans_list = [] if raw_spans is None else raw_spans
-        if len(spans_list) > 1:
-            spans_list = sorted(spans_list, key=lambda x: x["offset"] or 0)
-        for s in spans_list:
+        # NB: raw_spans arrives as a numpy array from Arrow -- test for
+        # None, its truth value is ambiguous
+        if raw_spans is None:
+            raise ValueError("NULL spans")
+        if len(raw_spans) > 1:
+            raw_spans = sorted(raw_spans, key=lambda x: x["offset"])
+        for s in raw_spans:
+            if s["offset"] is None:
+                raise ValueError("NULL span offset: order undefined")
             kind = s["kind"] or ""
             text = s["text"] or ""
             media = s["media_ref"] or ""
@@ -137,46 +136,57 @@ def _convert_row_core(raw_spans, cfg: Config):
     }
 
 
-def _convert_row_spans(raw_spans, cfg: Config):
-    """Full-output per-row conversion: input structs -> output structs."""
-    out, metrics = _convert_row_core(raw_spans, cfg)
-    out_structs = [
+#: how each shippable output column is built from one converted row
+_OUTPUT_COLUMNS = {
+    "spans": lambda out, metrics: [
         {"kind": k, "text": t, "media_ref": m, "offset": i}
         for i, (k, t, m) in enumerate(out)
-    ]
-    return out_structs, metrics
+    ],
+    "metrics": lambda out, metrics: metrics,
+    # the 'text' spans joined in order: exactly what markdown_col
+    # computes JVM-side (convert_spans invariant 1)
+    "markdown": lambda out, metrics: "".join(
+        t for k, t, _m in out if k == "text"
+    ),
+}
 
 
-def make_extract_fn(cfg: Optional[Config] = None, passthrough: tuple = ()):
-    """Build the mapInPandas batch function (closure captures the config).
+def _project(
+    df: DataFrame,
+    cfg: Optional[Config],
+    outputs: Tuple[StructField, ...],
+    passthrough: tuple = (),
+) -> DataFrame:
+    """The extraction projection: select -> mapInPandas(_convert_row_core).
 
-    ``passthrough`` columns ride along the projection unchanged: carrying
-    a grouping key (e.g. ``lang``) through the extraction costs nothing
-    here, whereas recovering it later means a corpus-x-corpus join -- and
-    broadcasting a corpus-sized side is a driver OOM at design scale.
+    Ships ``doc_id``, then the ``outputs`` columns (named in
+    _OUTPUT_COLUMNS), then the ``passthrough`` input columns unchanged.
+    ``mapInPandas`` is opaque to Catalyst, so column pruning cannot reach
+    inside the Python function's output: a column that is not shipped is
+    never built or Arrow-serialized.  Carrying a grouping key (e.g.
+    ``lang``) through costs nothing here, whereas recovering it later
+    means a corpus-x-corpus join.
     """
     cfg = cfg or Config()
+    builders = [(f.name, _OUTPUT_COLUMNS[f.name]) for f in outputs]
 
-    def extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_spans_col = []
-            metrics_col = []
-            for raw in pdf["spans"]:
-                spans, metrics = _convert_row_spans(raw, cfg)
-                out_spans_col.append(spans)
-                metrics_col.append(metrics)
-            out = {
-                "doc_id": pdf["doc_id"],
-                "spans": out_spans_col,
-                "metrics": metrics_col,
-            }
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = [_convert_row_core(raw, cfg) for raw in pdf["spans"]]
+            cols = {"doc_id": pdf["doc_id"]}
+            for name, build in builders:
+                cols[name] = [build(out, metrics) for out, metrics in rows]
             for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+                cols[c] = pdf[c]
+            yield pd.DataFrame(cols)
 
-    return extract_batches
+    schema = StructType(
+        [StructField("doc_id", StringType()), *outputs]
+        + [df.schema[c] for c in passthrough]
+    )
+    return df.select("doc_id", "spans", *passthrough).mapInPandas(
+        batches, schema
+    )
 
 
 def salt_by_size(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -299,27 +309,19 @@ def extract(
     cfg: Optional[Config] = None,
     salt_partitions: Optional[int] = None,
     stratify_bytes: Optional[int] = None,
-    passthrough: tuple = (),
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted(doc_id, spans, metrics).
 
     ``salt_partitions`` spreads documents uniformly (hash salt);
     ``stratify_bytes`` additionally routes documents above that size
     through the monster-tier cyclic layout (see salt_stratified).
-    ``passthrough`` names input columns to carry through unchanged
-    (appended after ``metrics`` with their input types) -- the scale-safe
-    way to keep grouping keys: no post-hoc join against the corpus.
+    Works on batch and streaming DataFrames alike.
     """
     if salt_partitions and stratify_bytes:
         df = salt_stratified(df, salt_partitions, stratify_bytes)
     elif salt_partitions:
         df = salt_by_size(df, salt_partitions)
-    schema = StructType(
-        list(OUTPUT_SCHEMA.fields) + [df.schema[c] for c in passthrough]
-    )
-    return df.select("doc_id", "spans", *passthrough).mapInPandas(
-        make_extract_fn(cfg, passthrough), schema
-    )
+    return _project(df, cfg, tuple(OUTPUT_SCHEMA.fields[1:]))
 
 
 def extract_metrics_only(
@@ -329,39 +331,15 @@ def extract_metrics_only(
 ) -> DataFrame:
     """Output-pruned extraction twin: (doc_id, metrics, *passthrough).
 
-    ``mapInPandas`` is opaque to Catalyst, so column pruning cannot reach
-    *inside* the Python function's output: a query that only consumes
-    ``metrics`` still pays Arrow serialization (and JVM materialization)
-    of every output span struct when it goes through plain ``extract``.
-    This twin runs the IDENTICAL per-row conversion (_convert_row_core)
-    but never builds or ships the span structs -- the optimization
-    guide's "pass only the columns the function needs", applied to the
-    output side of the boundary.  Values are exactly those of
-    ``extract(df).select("doc_id", "metrics", *passthrough)``.
+    Values are exactly those of ``extract(df).select("doc_id", "metrics")``
+    plus the ``passthrough`` input columns (appended with their input
+    types) -- the scale-safe way to keep grouping keys: no post-hoc join
+    against the corpus.  The span structs are never built or shipped.
+    Unlike extract(), it does not salt: pre-salt ``df`` (salt_by_size /
+    salt_stratified) when large documents may cluster.
     """
-    cfg = cfg or Config()
-
-    def metrics_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metrics_col = [
-                _convert_row_core(raw, cfg)[1] for raw in pdf["spans"]
-            ]
-            out = {"doc_id": pdf["doc_id"], "metrics": metrics_col}
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("metrics", METRICS_TYPE),
-        ]
-        + [df.schema[c] for c in passthrough]
-    )
-    return df.select("doc_id", "spans", *passthrough).mapInPandas(
-        metrics_batches, schema
+    return _project(
+        df, cfg, (StructField("metrics", METRICS_TYPE),), passthrough
     )
 
 
@@ -371,33 +349,11 @@ def extract_markdown_only(
     """Output-pruned extraction twin: (doc_id, markdown).
 
     Equivalent to ``text_of(extract(df))`` -- the markdown string is
-    assembled in the Python worker (join of the 'text' span texts in
-    order, exactly what ``markdown_col`` computes JVM-side) instead of
-    Arrow-shipping every span struct to the JVM and re-concatenating
-    there.  Identical values by convert_spans invariant 1.
+    assembled in the Python worker instead of Arrow-shipping every span
+    struct to the JVM and re-concatenating there.  Like
+    extract_metrics_only, it does not salt ``df``.
     """
-    cfg = cfg or Config()
-
-    def md_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            md_col = [
-                "".join(
-                    t for k, t, _m in _convert_row_core(raw, cfg)[0]
-                    if k == "text"
-                )
-                for raw in pdf["spans"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "markdown": md_col})
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("markdown", StringType()),
-        ]
-    )
-    return df.select("doc_id", "spans").mapInPandas(md_batches, schema)
+    return _project(df, cfg, (StructField("markdown", StringType()),))
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

@@ -481,6 +481,20 @@ def test_streaming_extract(spark, tmp_path, docs):
     result = spark.read.parquet(out_dir)
     assert result.count() == 25
     assert set(result.columns) == {"doc_id", "spans", "metrics"}
+    # a streamed row equals the batch row of the same input
+    from html2text_spark.pipeline import extract
+
+    def rows(df):
+        return sorted(
+            df.select(
+                "doc_id",
+                "spans",
+                F.col("metrics.spans").alias("n_spans"),
+                F.col("metrics.malformed").alias("malformed"),
+            ).collect()
+        )
+
+    assert rows(result) == rows(extract(spark.read.parquet(in_dir)))
     # re-running with same checkpoint is exactly-once: no new rows
     q2 = streaming_extract(spark, in_dir, out_dir, ckpt)
     q2.awaitTermination(120)

@@ -430,22 +430,45 @@ def test_monster_document_skew(spark):
 
 def test_null_and_ragged_rows_never_fail_the_batch(spark):
     """NULL spans / NULL struct fields must yield malformed rows, not
-    batch failures (one bad row in a 10^12-doc corpus can't kill a task)."""
+    batch failures (one bad row in a 10^12-doc corpus can't kill a task).
+    A NULL offset leaves the span order undefined, so it is malformed
+    too; an empty spans array is a well-formed empty document."""
+    from html2text_spark.pipeline import (
+        extract_markdown_only,
+        extract_metrics_only,
+    )
+
+    def span(text, offset):
+        return {"kind": "html", "text": text, "media_ref": "", "offset": offset}
+
     rows = [
-        ("ok", [{"kind": "html", "text": "<p>fine</p>", "media_ref": "", "offset": 0}]),
+        ("ok", [span("<p>fine</p>", 0)]),
         ("null-spans", None),
         ("null-fields", [{"kind": None, "text": None, "media_ref": None, "offset": None}]),
         ("empty-array", []),
+        ("null-offset", [span("<p>one</p>", None)]),
+        ("one-null-offset", [span("<p>a</p>", 0), span("<p>b</p>", None)]),
     ]
+    want_malformed = {
+        "ok": False,
+        "null-spans": True,
+        "null-fields": True,
+        "empty-array": False,
+        "null-offset": True,
+        "one-null-offset": True,
+    }
     df = spark.createDataFrame(rows, INPUT_SCHEMA)
     out = {r["doc_id"]: r for r in extract(df).collect()}
-    assert len(out) == 4
-    assert not out["ok"]["metrics"]["malformed"]
+    assert len(out) == len(rows)
+    assert {d: r["metrics"]["malformed"] for d, r in out.items()} == want_malformed
     assert "".join(s["text"] for s in out["ok"]["spans"] if s["kind"] == "text") == "fine\n\n"
-    for bad in ("null-spans", "empty-array"):
+    for bad in ("null-spans", "null-fields", "empty-array", "null-offset", "one-null-offset"):
         assert out[bad]["spans"] == []
-    # null struct fields: kind '' is neither html nor media -> empty output
-    assert out["null-fields"]["spans"] == []
+
+    metrics = {r["doc_id"]: r["metrics"] for r in extract_metrics_only(df).collect()}
+    assert {d: m["malformed"] for d, m in metrics.items()} == want_malformed
+    markdown = {r["doc_id"]: r["markdown"] for r in extract_markdown_only(df).collect()}
+    assert markdown == {d: ("fine\n\n" if d == "ok" else "") for d in want_malformed}
 
 
 def test_flat_source_formats_round_trip(spark, tmp_path):
